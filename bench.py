@@ -36,8 +36,10 @@ reference's `GET /` recompute path).
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -322,8 +324,6 @@ def bench_ingest_batch(spark, sf_dir: str) -> None:
     call reports per-phase walls for BOTH batches (initial.* = the
     cold index commit, incr.* = the steady-state leg a nightly
     pipeline pays per batch)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from lambda_sample_spark.io import load_table
@@ -415,8 +415,6 @@ def bench_nbq_prod(spark, sf_dir: str) -> None:
     finally:
         # min-of-3 repeats would otherwise leave model parquet dirs in
         # /tmp per invocation (the scale_oneoff-workdir lesson)
-        import shutil
-
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -466,14 +464,13 @@ def bench_stream_bottomk(spark, sf_dir: str) -> None:
     staged once per process (the warmup sweep pays it); every measured
     repeat gets a fresh checkpoint + sink so the trigger does the
     complete stateful pass — events/s = table rows / this number."""
-    import shutil
-
     from lambda_sample_spark.io import load_table
     from lambda_sample_spark.streaming.stateful import stateful_windowed_bottomk
 
     src = _STREAM_SRC.get(sf_dir)
     if src is None:
         src = tempfile.mkdtemp(prefix="bench_stream_src_")
+        atexit.register(shutil.rmtree, src, ignore_errors=True)
         load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts", "value"
         ).write.mode("overwrite").parquet(src)
@@ -527,7 +524,6 @@ def bench_serving_sla(spark, sf_dir: str) -> None:
     streaming/perf.py and the /perf box-plot aggregates forced. The 5 s
     SLA is asserted inside the run — a bench sweep where serving
     breaches the envelope must fail loudly, not record quietly."""
-    import shutil
     import urllib.request
     from concurrent.futures import ThreadPoolExecutor
 
@@ -539,7 +535,9 @@ def bench_serving_sla(spark, sf_dir: str) -> None:
 
     src = _ENTRY_SRC.get(sf_dir)
     if src is None:
-        src = tempfile.mkdtemp(prefix="bench_entries_") + "/log"
+        tmp = tempfile.mkdtemp(prefix="bench_entries_")
+        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+        src = tmp + "/log"
         load_table(spark, sf_dir, "events").select(
             F.col("event_type").alias("sensor"),
             "ts",

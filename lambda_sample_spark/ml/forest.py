@@ -399,7 +399,7 @@ def rf_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type clustering (subset-key distribution), with the
     key-fleet-sized model tables broadcast."""
     from ..operators.anomaly import recent_per_key
-    from ..operators.common import events
+    from ..operators.common import events, stage
 
     labeled = _labeled_events(
         recent_per_key(events(spark, sf_dir), n=RECENT_TRAIN_N)
@@ -409,16 +409,9 @@ def rf_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below and the per-(key, bin) census would otherwise each run the
     # corpus-sized recent-window pass (the q_ccnet scratch idiom —
     # contract rows must not hold persisted RDDs, test_no_cache_leak)
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_rfp_{tag}", "labeled")
-    labeled.select("event_type", "value", "anomaly").write.mode(
-        "overwrite"
-    ).parquet(path)
-    labeled = spark.read.parquet(path)
+    labeled = stage(
+        labeled.select("event_type", "value", "anomaly"), sf_dir, "rfp", "labeled"
+    )
     # the extent census is key-fleet-sized and feeds THREE consumers
     # (per-bin probe side, probe cross join, output counts): collect it
     # eagerly and inline as a local frame, or the adaptive plan re-runs

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import documents
+from .common import documents, stage
 from .multimodal import MEDIA_SCHEMA
 from .phash import phash_near_dup
 
@@ -202,18 +202,10 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (the q_video_near_dup idiom — round 15): the band
     self-join consumes it on BOTH sides, so left lazy the
     synthesize+decode mapInPandas pipeline ran twice."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_afp_{tag}", "fp")
-    audio_fingerprints(synthesize_afp_media(spark, sf_dir)).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return phash_near_dup(
-        spark.read.parquet(path), max_hamming=7, hash_col="fp"
+    fp = stage(
+        audio_fingerprints(synthesize_afp_media(spark, sf_dir)), sf_dir, "afp", "fp"
     )
+    return phash_near_dup(fp, max_hamming=7, hash_col="fp")
 
 
 def _byte(p: str) -> str:

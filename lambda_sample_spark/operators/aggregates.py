@@ -128,27 +128,19 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The measure is the per-user event count (a right-skewed series, like
     the dashboard's response times); bounds computed per event_type.
 
-    Round-15 staged the per-user count table through per-sf_dir
-    scratch parquet (the bounds aggregate and the outlier filter both
-    consume it; lazy, events is scanned twice). Round-16: the sf1 A/B
-    measured the staged shape 1.17x SLOWER at sf1 (1.09->1.27 s; also
-    slower at sf0.1) — the re-derived scan+shuffle run as cheap
-    parallel stages while the write is a barrier — so LAZY is the
-    default again and the staging sits behind the
-    SPARK_GRAFT_STAGE_SHARED=1 scale seam (common.stage_shared_enabled;
-    equivalence pinned in test_eager_seams). A per-type window for the
-    bounds stays rejected: it would funnel every user of a type
-    through one task.
+    The per-user count table stays lazy although the bounds aggregate
+    and the outlier filter both consume it (events is scanned twice):
+    the sf1 A/B measured a scratch-staged copy 1.17x SLOWER at sf1
+    (1.09->1.27 s; also slower at sf0.1) — the re-derived scan+shuffle
+    run as cheap parallel stages while the write is a barrier. A
+    per-type window for the bounds stays rejected: it would funnel
+    every user of a type through one task.
     """
-    from .common import scratch_stage, stage_shared_enabled
-
     per_user = (
         events(spark, sf_dir)
         .groupBy("event_type", "user_id")
         .agg(F.count("*").alias("cnt"))
     )
-    if stage_shared_enabled():
-        per_user = scratch_stage(spark, per_user, "iqr", sf_dir, "per_user")
     bounds = (
         per_user.groupBy("event_type")
         .agg(F.expr("percentile(cnt, array(0.25D, 0.75D))").alias("q"))

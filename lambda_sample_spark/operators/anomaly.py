@@ -67,9 +67,7 @@ def clamp_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def robust_zscore(
-    spark: SparkSession, sf_dir: str, eager_stats: bool = False
-) -> DataFrame:
+def robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-sensor robust-statistics outlier census: median + MAD
     (median absolute deviation) per event_type, and the count of
     events whose |value - median| exceeds 3σ under the normal-
@@ -86,35 +84,23 @@ def robust_zscore(
     test SF; at 100 TB swap to ``percentile_approx`` exactly as the
     quantile rows document.
 
-    ``eager_stats`` (round 15, OFF for the graded row): the lazy
-    broadcast legs re-run every EARLIER percentile pass (5 events
-    scans in the executed plan vs the sequentially-dependent minimum
-    of 3) — but at sf0.1 those re-derived scans run as cheap PARALLEL
-    stages of one job while the eager path pays two driver
-    synchronization barriers (interleaved A/B: 0.94 lazy vs 1.86 s
-    eager), so the default keeps the driver bench comparable. At
-    100 TB the scan-count term dominates the two barriers by orders
-    of magnitude: flip ``eager_stats=True`` (the rf_predict
-    bounded-census idiom — identical results, pinned in
-    tests/test_anomaly_golden.py)."""
+    The lazy broadcast legs re-run every earlier percentile pass (5
+    events scans in the executed plan vs the sequentially-dependent
+    minimum of 3), but at sf0.1 those scans run as cheap parallel
+    stages of one job: collecting the stats frames between passes
+    measured slower (interleaved A/B: 0.94 lazy vs 1.86 s eager).
+    Outlier resistance and oracle parity are pinned in
+    tests/test_robust_inverted.py."""
     ev = events(spark, sf_dir).select("event_type", "value")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5D)").alias("med")
     )
-    if eager_stats:
-        med = spark.createDataFrame(
-            med.collect(), "event_type STRING, med DOUBLE"
-        )
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type", "med", F.abs(F.col("value") - F.col("med")).alias("ad")
     )
     mad = dev.groupBy("event_type", "med").agg(
         F.expr("percentile(ad, 0.5D)").alias("mad")
     )
-    if eager_stats:
-        mad = spark.createDataFrame(
-            mad.collect(), "event_type STRING, med DOUBLE, mad DOUBLE"
-        )
     flagged = (
         ev.join(F.broadcast(mad), "event_type")
         .where(
@@ -169,9 +155,7 @@ FROM events
 """,
 }
 
-def seasonal_baseline(
-    spark: SparkSession, sf_dir: str, eager_stats: bool = False
-) -> DataFrame:
+def seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonality-aware anomaly census: learn a per-(sensor,
     hour-of-day) baseline (mean + population stddev) from the FIRST
     half of the corpus's time range, then count second-half events
@@ -188,16 +172,11 @@ def seasonal_baseline(
 
     Shape: one scalar aggregate + two grouped passes over the fact
     table + a broadcast baseline join — |types| × 24 baseline rows,
-    never a data-sized second shuffle.
-
-    ``eager_stats`` (round 15, OFF for the graded row): collects the
-    scalar split and the bounded baseline census between passes, so
-    the executed plan holds the sequentially-dependent minimum of 3
-    events scans instead of 4 lazily re-derived ones. The lazy
-    re-derivations are cheap parallel stages at sf0.1 while the eager
-    barriers cost more (interleaved A/B: 0.88 lazy vs 1.19 s eager) —
-    at 100 TB the extra corpus scan dominates the barriers, so
-    production flips the flag (identical results, same expressions)."""
+    never a data-sized second shuffle. The executed plan holds 4
+    lazily re-derived events scans against the sequentially-dependent
+    minimum of 3, but collecting the split and the baseline between
+    passes measured slower at sf0.1 (interleaved A/B: 0.88 lazy vs
+    1.19 s eager)."""
     ev = events(spark, sf_dir).select(
         "event_type", "value", ts_ms().alias("t")
     )
@@ -209,11 +188,8 @@ def seasonal_baseline(
         .cast("bigint")
         .alias("mid")
     )
-    if eager_stats:
-        mid = F.lit(split.collect()[0]["mid"]).cast("bigint")
-    else:
-        ev = ev.join(F.broadcast(split))
-        mid = F.col("mid")
+    ev = ev.join(F.broadcast(split))
+    mid = F.col("mid")
     hod = (F.floor(F.col("t") / 3_600_000) % 24).cast("bigint")
     train = ev.where(F.col("t") < mid)
     base = train.groupBy("event_type", hod.alias("hod")).agg(
@@ -234,11 +210,6 @@ def seasonal_baseline(
             - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))
         ).alias("sigma"),
     )
-    if eager_stats:
-        base = spark.createDataFrame(
-            base.collect(),
-            "event_type STRING, hod BIGINT, mu DOUBLE, sigma DOUBLE",
-        )
     test = ev.where(F.col("t") >= mid).select(
         "event_type", hod.alias("hod"), "value"
     )

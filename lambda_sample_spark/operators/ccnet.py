@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .common import documents
+from .common import documents, stage
 
 BACKOFF = 0.4  # stupid-backoff discount (Brants et al. 2007, fixed)
 
@@ -288,18 +288,10 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan re-runs the corpus censuses per consumer (measured 27
     Exchange nodes lazy vs 1 staged). Train → persist model → score →
     persist scores is also precisely the production pipeline shape."""
-    import hashlib
-    import os
-    import tempfile
-
     docs = documents(spark, sf_dir).select("doc_id", "lang", "text")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"lss_ccnet_{tag}")
 
     def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(base, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return stage(df, sf_dir, "ccnet", name)
 
     lm_uni, lm_big, flr = train_bigram_lm(
         docs.where(F.col("doc_id") % 10 < 8), materialize=mat

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import documents, fan_out, r6z
+from .common import documents, fan_out, r6z, stage
 from .dsir import _bucketed_grams
 
 GRAM_N = 2  # word bigrams — the fastText default feature unit
@@ -515,18 +515,10 @@ def q_nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan re-runs the corpus census once per consumer; persisting the
     trained model is also precisely the production artifact shape.
     """
-    import hashlib
-    import os
-    import tempfile
-
     docs = documents(spark, sf_dir).select("doc_id", "lang", "text")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"lss_nbq_{tag}")
 
     def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(base, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return stage(df, sf_dir, "nbq", name)
 
     weights, consts = train_nb(
         docs.where(F.col("doc_id") % 10 < 8),

@@ -12,6 +12,10 @@ schema + order-insensitive value hash):
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,40 +54,26 @@ def r6(c: Column) -> Column:
     return F.round(c, ROUND)
 
 
-def stage_shared_enabled() -> bool:
-    """Round-16 scale seam for the shared-subplan scratch stagings:
-    ON only when SPARK_GRAFT_STAGE_SHARED=1 (the 100 TB setting,
-    where a duplicated corpus-sized derivation is a full fact scan).
-    Default LAZY: the r16 sf1 A/B (OPTIMIZATION_r16.md, lazy 4ba2a9e
-    worktree vs staged, min-of-4 interleaved) measured the staged
-    write+read SLOWER at BOTH sf0.1 and sf1 for six of the r15
-    stagings (q_ngram_jaccard 1.37x, q_cms_heavy_hitters 1.29x,
-    q_iqr_outliers 1.17x, q_label_centroids/q_resample_gapfill 1.15x,
-    q_sampled_quantiles 1.14x) — at these SFs the re-derived subplan's
-    stages are cheaper than the materialization barrier. Equivalence
-    of the two shapes is pinned in tests/test_eager_seams.py."""
-    import os as _os
-
-    return _os.environ.get("SPARK_GRAFT_STAGE_SHARED", "0") == "1"
+def scratch_path(sf_dir: str, group: str) -> str:
+    """Deterministic per-sf_dir scratch root ``<tmp>/lss_<group>_<tag>``
+    (tag = md5 of the absolute sf_dir), so repeated runs of a row over
+    one input reuse one directory instead of accumulating temp trees."""
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    return os.path.join(tempfile.gettempdir(), f"lss_{group}_{tag}")
 
 
-def scratch_stage(
-    spark: SparkSession, df: DataFrame, group: str, sf_dir: str, name: str
-) -> DataFrame:
-    """Materialize a shared subplan through per-sf_dir overwrite
-    scratch parquet (the established ``lss_`` idiom — recomputed from
-    raw inputs on every invocation, never an exists->reuse fast path)
-    and hand back the re-read frame. Callers gate on
-    ``stage_shared_enabled()`` unless their row keeps staging
-    unconditionally (the rows the sf1 A/B showed winning)."""
-    import hashlib
-    import os as _os
-    import tempfile as _tempfile
-
-    tag = hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = _os.path.join(_tempfile.gettempdir(), f"lss_{group}_{tag}", name)
+def stage(df: DataFrame, sf_dir: str, group: str, name: str) -> DataFrame:
+    """The one way to cut a shared subplan: write ``df`` to
+    ``scratch_path(sf_dir, group)/name`` with mode=overwrite and hand
+    back the re-read frame. Every call recomputes from the raw inputs
+    — an existing directory is never reused as a cache — and nothing
+    stays persisted in the session (no localCheckpoint, no cache), so
+    a long-lived session gains no RDD blocks (test_no_cache_leak).
+    Pass ``df.repartition(1)`` for a bounded table that should land in
+    one file."""
+    path = os.path.join(scratch_path(sf_dir, group), name)
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .common import documents, r6
+from .common import documents, r6, stage
 
 JACCARD_THRESHOLD = 0.95
 
@@ -73,24 +73,11 @@ def _distinct_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def _ngram_sets(
-    docs: DataFrame, materialize=None
-) -> tuple[DataFrame, DataFrame]:
+def _ngram_sets(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Level-1 set collapse for ngram_jaccard: the doc -> set_key
     membership frame and the distinct-set ``groups`` table (rep doc,
     sorted token array, size). Split out so the scale-stress test can
-    feed ``_ppjoin_candidates`` directly.
-
-    ``materialize``, if given, is ``fn(df, name) -> df`` applied to
-    ``sets`` and ``groups``: downstream, membership has 2 consumers
-    and groups ~7 (identity pairs, deletion keys ×2, PPJoin prefix ×2
-    + document frequencies, verification ×2) — round 15 measured the
-    EXECUTED contract plan at 11 parquet scans / 23 exchanges with
-    everything lazy (ReuseExchange does NOT merge the subplans, the
-    docstring's previous claim notwithstanding: the consumers' pruned
-    projections and filters make every exchange non-canonical). With
-    the two cuts the corpus tokenize+collect_set pipeline runs
-    exactly once."""
+    feed ``_ppjoin_candidates`` directly."""
     toks = _distinct_tokens(docs)
     sets = (
         toks.groupBy("doc_id", "lang")
@@ -103,8 +90,6 @@ def _ngram_sets(
             ),
         )
     )
-    if materialize is not None:
-        sets = materialize(sets, "sets")
     membership = sets.select("doc_id", "lang", "set_key")
     groups = (
         sets.groupBy("lang", "set_key")
@@ -115,8 +100,6 @@ def _ngram_sets(
         )
         .withColumn("sz", F.size("tokset"))
     )
-    if materialize is not None:
-        groups = materialize(groups, "groups")
     return membership, groups
 
 
@@ -210,27 +193,16 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (~1e11 keys => hundreds of expected collisions => wrong
     J=1.0 pairs); two seeds put collisions at ~1e-17.
 
-    Round 15 staged the shared aggregate subtrees (sets, groups)
-    through per-sf_dir scratch parquet (the lazy plan re-derives them
-    11-scans/23-exchanges wide). Round-16: the sf1 A/B measured the
-    staged shape 1.37x SLOWER at sf1 (7.79->10.70 s; +0.39 s at
-    sf0.1 too) — the lazy re-derivations run as parallel stages over
-    page-cached input while the two scratch writes serialize the whole
-    row — so LAZY is the default again and the staging sits behind
-    SPARK_GRAFT_STAGE_SHARED=1 (common.stage_shared_enabled;
-    equivalence pinned in test_eager_seams).
+    The shared aggregate subtrees (sets, groups) stay lazy although
+    the plan re-derives them 11-scans/23-exchanges wide: the sf1 A/B
+    measured a scratch-staged copy 1.37x SLOWER at sf1 (7.79->10.70 s;
+    +0.39 s at sf0.1 too) — the lazy re-derivations run as parallel
+    stages over page-cached input while the two scratch writes
+    serialize the whole row.
     """
-    from .common import scratch_stage, stage_shared_enabled
-
     t = JACCARD_THRESHOLD
     docs = documents(spark, sf_dir)
-
-    mat = None
-    if stage_shared_enabled():
-        def mat(df: DataFrame, name: str) -> DataFrame:
-            return scratch_stage(spark, df, "njac", sf_dir, name)
-
-    membership, groups = _ngram_sets(docs, materialize=mat)
+    membership, groups = _ngram_sets(docs)
 
     # 2. identical-set pairs are (k, k) set pairs with J = 1.0 — they
     # ride the same doc-pair expansion as the verified pairs below
@@ -460,19 +432,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would outlive the query in the driver's shared session,
     # test_no_cache_leak). Interleaved A/B at sf0.1: 2.04 → 1.89 s,
     # and the corpus pipeline runs once instead of once per join side.
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"lss_dnear_{tag}")
-
-    def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(base, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    rep = mat(rep, "rep0")
+    rep = stage(rep, sf_dir, "dnear", "rep0")
     for i in range(REP_ROUNDS - 1):
         parent = rep.select(
             F.col("doc_id").alias("p_doc"), F.col("rep_id").alias("p_rep")
@@ -484,7 +444,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("p_rep", "rep_id").alias("rep_id"),
         )
         if i < REP_ROUNDS - 2:
-            rep = mat(rep, f"rep{i + 1}")
+            rep = stage(rep, sf_dir, "dnear", f"rep{i + 1}")
     return rep.select(
         "doc_id",
         "rep_id",

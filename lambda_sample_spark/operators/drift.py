@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
+from .common import stage
 
 N_BINS = 10
 _SPLIT = "2024-01-16 00:00:00"
@@ -234,17 +235,9 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothing, and the exact-decimal term sum all hash-compared. The
     bounded edge table stages through per-sf_dir scratch parquet (the
     q_ccnet idiom) so the reference window runs once."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"lss_drift_{tag}")
 
     def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(base, name)
-        df.repartition(1).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return stage(df.repartition(1), sf_dir, "drift", name)
 
     return drift_psi(
         load_table(spark, sf_dir, "events"), _SPLIT, materialize=mat

@@ -292,21 +292,16 @@ def q_connected_components(spark, sf_dir: str) -> DataFrame:
     driver's long-lived session gets zero persistent RDD blocks from
     this row (test_no_cache_leak) and repeated sweeps reuse one
     directory."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..io import load_table
+    from .common import stage
     from .dedup import ngram_jaccard
 
     pairs = ngram_jaccard(spark, sf_dir).select("d1", "d2")
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_cc_{tag}", "labels")
     lab = connected_components(pairs, src="d1", dst="d2", nodes=docs)
-    lab.write.mode("overwrite").parquet(path)
+    staged = stage(lab, sf_dir, "cc", "labels")
     unpersist_checkpoint(lab)  # drop the returned checkpoint's blocks
-    return spark.read.parquet(path).select(
+    return staged.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import r6
+from .common import r6, stage
 from ..io import load_table
 
 
@@ -134,26 +134,18 @@ def q_cooccur_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic per-sf_dir scratch parquet (the q_ccnet_buckets
     idiom — overwrite every run, recomputed from the inputs) so the
     corpus is scanned once, not once per census consumer."""
-    import hashlib
-    import os
-    import tempfile
-
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     items = li.join(part, li.l_partkey == part.p_partkey).select(
         "l_orderkey", "p_brand"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"lss_cooc_{tag}")
 
     def mat(df: DataFrame, name: str) -> DataFrame:
         # the census is vocabulary-bounded (|V|=25 brands → ≤ ~700
         # rows): one output file, not one per shuffle partition.
         # repartition, not coalesce — coalesce(1) would propagate up
         # and serialize the census aggregate itself into one task
-        path = os.path.join(base, name)
-        df.repartition(1).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return stage(df.repartition(1), sf_dir, "cooc", name)
 
     return cooccurrence_lift(items, "l_orderkey", "p_brand", materialize=mat)
 

@@ -188,7 +188,7 @@ def hierarchical_rollup(ev: DataFrame) -> dict[str, DataFrame]:
     return {"hour": hour, "day": day, "month": month}
 
 
-def hll_sketch_rollup(ev: DataFrame, materialize=None) -> dict[str, DataFrame]:
+def hll_sketch_rollup(ev: DataFrame) -> dict[str, DataFrame]:
     """Mergeable distinct-count sketches — the continuous-aggregate
     pattern for COUNT(DISTINCT) (which, unlike sum/count/min/max in
     ``hierarchical_rollup``, is NOT algebraic: daily distinct counts
@@ -207,12 +207,6 @@ def hll_sketch_rollup(ev: DataFrame, materialize=None) -> dict[str, DataFrame]:
             F.date_trunc("day", "ts").alias("day"), "event_type"
         ).agg(F.hll_sketch_agg("user_id", HLL_LG_K).alias("sk"))
     )
-    # the day frame feeds the day estimate AND the month merge;
-    # ``materialize`` (round 15) cuts it so the corpus sketch pass
-    # runs once — this IS the "day frame as materialized aggregate"
-    # design the docstring describes, made literal
-    if materialize is not None:
-        day = materialize(day, "hll_day")
     month = (
         day.groupBy(F.date_trunc("month", "day").alias("month"), "event_type")
         .agg(F.hll_union_agg("sk").alias("sk"))
@@ -264,13 +258,10 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     land within the pinned bound of the exact monthly count. Output:
     (level, bucket_ms, event_type, n_users_exact, within_pct).
 
-    Round-15 note: staging the day-sketch frame through scratch
-    parquet (``hll_sketch_rollup(materialize=...)``) halves the
-    corpus sketch passes but A/B'd WORSE at sf0.1 (1.02 lazy vs
-    1.36 s staged — write+read latency beats a parallel re-derived
-    scan at this size), so the graded row stays lazy; at 100 TB the
-    day frame IS the persisted continuous aggregate (the docstring's
-    design) and callers pass the materializer."""
+    The day-sketch frame stays lazy although the day estimate and the
+    month merge both consume it: staging it through scratch parquet
+    halves the corpus sketch passes but A/B'd WORSE at sf0.1 (1.02
+    lazy vs 1.36 s staged)."""
     ev = events(spark, sf_dir)
     levels = hll_sketch_rollup(ev)
 
@@ -404,24 +395,16 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     no_undercount (est >= exact, the CMS guarantee) must be TRUE on
     every row by construction.
 
-    Round-15 staged the vocabulary-bounded (source, tok, cnt) census
-    through per-sf_dir scratch parquet (the sketch cells and the exact
-    totals both consume it; lazy, documents is tokenized twice).
-    Round-16: the sf1 A/B measured the staged shape 1.29x SLOWER at
-    sf1 (7.11->9.17 s; also slower at sf0.1) — LAZY is the default
-    again, staging behind SPARK_GRAFT_STAGE_SHARED=1
-    (common.stage_shared_enabled; equivalence in test_eager_seams)."""
-    from .common import scratch_stage, stage_shared_enabled
-
+    The vocabulary-bounded (source, tok, cnt) census stays lazy
+    although the sketch cells and the exact totals both consume it
+    (documents is tokenized twice): the sf1 A/B measured a
+    scratch-staged copy 1.29x SLOWER at sf1 (7.11->9.17 s; also
+    slower at sf0.1)."""
     docs = documents(spark, sf_dir)
     toks = docs.select(
         "source", F.explode(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+")).alias("tok")
     )
     per_source = toks.groupBy("source", "tok").agg(F.count("*").alias("cnt"))
-    if stage_shared_enabled():
-        per_source = scratch_stage(
-            spark, per_source.repartition(1), "cms", sf_dir, "per_source"
-        )
     cells = cms_merge(cms_cells(per_source, "tok", "cnt", ["source"]))
     totals = per_source.groupBy("tok").agg(F.sum("cnt").alias("n_exact"))
     top = totals.orderBy(F.col("n_exact").desc(), F.col("tok").asc()).limit(
@@ -540,17 +523,11 @@ def sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate values themselves are hash-compared — deterministic
     sampling makes them identical across engines."""
     ev = events(spark, sf_dir)
-    # Round 15 staged the day sketches (they feed the day estimate AND
-    # the month merge; lazy the bottom-k window runs once per
-    # consumer). Round-16: sf1 A/B measured the staged shape 1.14x
-    # SLOWER (2.51->2.87 s; also slower at sf0.1) — lazy default, the
-    # staging behind SPARK_GRAFT_STAGE_SHARED=1. The round-15 fused
-    # single-pass validation below is kept (that one was a win).
-    from .common import scratch_stage, stage_shared_enabled
-
+    # The day sketches stay lazy although they feed the day estimate
+    # AND the month merge (the bottom-k window runs once per
+    # consumer): sf1 A/B measured a scratch-staged copy 1.14x SLOWER
+    # (2.51->2.87 s; also slower at sf0.1).
     day_s = bottomk_day_samples(ev)
-    if stage_shared_enabled():
-        day_s = scratch_stage(spark, day_s, "bk", sf_dir, "day_s")
     month_s = bottomk_merge(day_s, "month")
 
     # ONE exact validation pass for both levels (round 15, guide

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import documents
+from .common import documents, stage
 from .multimodal import MEDIA_SCHEMA
 
 HASH_SCHEMA = "doc_id BIGINT, dhash BIGINT, bands ARRAY<INT>"
@@ -347,16 +347,10 @@ def q_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_video_near_dup idiom — round 15): the band self-join consumes it
     on BOTH sides, so left lazy the synthesize+decode mapInPandas
     pipeline (the only expensive stage) ran twice."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_phash_{tag}", "hashes")
-    dhash_images(synthesize_phash_media(spark, sf_dir)).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return phash_near_dup(spark.read.parquet(path), max_hamming=7)
+    hashes = stage(
+        dhash_images(synthesize_phash_media(spark, sf_dir)), sf_dir, "phash", "hashes"
+    )
+    return phash_near_dup(hashes, max_hamming=7)
 
 
 # DuckDB reconstructs pixels straight from the keystream definition —

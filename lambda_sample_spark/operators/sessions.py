@@ -260,7 +260,6 @@ def resample_gapfill(
     step_ms: int = RESAMPLE_STEP_MS,
     key_col: str = "event_type",
     value_col: str = "value",
-    materialize=None,
 ) -> DataFrame:
     """Time-series resampling onto a fixed grid with gap-fill — the
     sensor-pipeline op between raw ingest and modeling: per key,
@@ -282,15 +281,9 @@ def resample_gapfill(
     small; one shuffle to slot-aggregate, one window pass per
     direction over the slot table (same partition key, same ordering:
     a single sort serves both frames). The slot-aggregate lineage is
-    consumed twice (extent + join): left lazy, each consumer
-    re-derives the aggregate from its own RAW events scan (executed
-    plan: events scanned twice, 0 ReusedExchange — the old claim
-    that the raw pass ran once per consumer undersold the cost,
-    because that raw pass IS the expensive part at 100 TB). The
-    contract row therefore passes ``materialize`` (round-15): the
-    bounded keys×slots table stages through per-sf_dir scratch
-    parquet, the raw events are scanned ONCE, and both consumers
-    read the staged table.
+    consumed twice (extent + join), and each consumer re-derives the
+    aggregate from its own raw events scan (executed plan: events
+    scanned twice, 0 ReusedExchange).
 
     Determinism/oracle: slot means are exact-integer-rounded 6dp
     averages (common.exact_avg6 — the q_tumbling_window hardening; the
@@ -306,8 +299,6 @@ def resample_gapfill(
         F.count("*").alias("n_obs"),
         exact_avg6(value_col).alias("v_raw"),
     )
-    if materialize is not None:
-        obs = materialize(obs, "slots")
     extent = obs.groupBy(key_col).agg(
         F.min("slot").alias("lo"), F.max("slot").alias("hi")
     )
@@ -355,23 +346,12 @@ def resample_gapfill(
 
 def q_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract (tail, round 9): hourly resample + LOCF + linear
-    interpolation of the events value series per event_type.
-    Round 15 staged the bounded keys×slots aggregate through
-    per-sf_dir scratch so the raw events scan runs once, not once per
-    consumer (extent + grid join); round-16 sf1 A/B measured the
-    staged shape 1.15x SLOWER at sf1 (1.29->1.49 s; also slower at
-    sf0.1) — lazy default, staging behind SPARK_GRAFT_STAGE_SHARED=1
-    (equivalence in test_eager_seams)."""
-    from .common import scratch_stage, stage_shared_enabled
-
-    mat = None
-    if stage_shared_enabled():
-        def mat(df: DataFrame, name: str) -> DataFrame:
-            return scratch_stage(
-                spark, df.repartition(1), "resample", sf_dir, name
-            )
-
-    return resample_gapfill(events(spark, sf_dir), materialize=mat)
+    interpolation of the events value series per event_type. The
+    bounded keys×slots aggregate stays lazy although its two consumers
+    (extent + grid join) each scan events: the sf1 A/B measured a
+    scratch-staged copy 1.15x SLOWER at sf1 (1.29->1.49 s; also slower
+    at sf0.1)."""
+    return resample_gapfill(events(spark, sf_dir))
 
 
 

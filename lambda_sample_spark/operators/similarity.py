@@ -17,6 +17,8 @@ All cosine math uses functions/vectors.py (JVM higher-order fns).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, cosine, dot
-from .common import embeddings, r6
+from .common import embeddings, r6, scratch_path
 
 N_QUERIES = 5
 TOP_K = 10
@@ -834,7 +836,11 @@ def ivf_probe_index(
     query ids live in a DIFFERENT id namespace, where an accidental
     id collision must not suppress a legitimate neighbor.
 
-    ``queries``: (q_id, q_vec) frame; returns (q_id, c_id, cos, rk)."""
+    ``queries``: (q_id, q_vec) frame with unique q_id — a repeated
+    q_id raises ValueError (it would join every probed cell twice and
+    give each neighbour two ranks). The index may come from another
+    producer, so a vec_id stored twice is collapsed in the rerank's
+    (q_id, c_id, cos) dedup. Returns (q_id, c_id, cos, rk)."""
     centroids = spark.read.parquet(f"{path}/centroids")
     k = centroids.count()  # k-row table: this job reads one tiny file
     if nprobe is None:
@@ -849,14 +855,21 @@ def ivf_probe_index(
         lambda a, x: a + x,
     )
     wq = Window.partitionBy("q_id").orderBy(F.col("cell_dot").desc(), F.col("cluster"))
+    # dense_rank, not row_number: clusters are unique, so for a unique
+    # q_id the two agree, while the copies of a repeated q_id tie and
+    # surface as a repeated (q_id, cluster) pair even at nprobe=1
     probe_rows = (
         q.crossJoin(F.broadcast(centroids))
         .withColumn("cell_dot", cell_score)
-        .withColumn("cell_rk", F.row_number().over(wq))
+        .withColumn("cell_rk", F.dense_rank().over(wq))
         .where(F.col("cell_rk") <= nprobe)
         .select("q_id", "cluster")
         .collect()
     )
+    pairs = [(r.q_id, r.cluster) for r in probe_rows]
+    dup = sorted({p[0] for p, n in Counter(pairs).items() if n > 1}, key=str)
+    if dup:
+        raise ValueError(f"ivf_probe_index: repeated q_id in queries: {dup[:5]}")
     from pyspark.sql import types as T
 
     clusters = sorted({r.cluster for r in probe_rows})
@@ -866,21 +879,19 @@ def ivf_probe_index(
     pair_schema = T.StructType(
         [queries.schema["q_id"], T.StructField("cluster", T.IntegerType())]
     )
-    probed = spark.createDataFrame(
-        [(r.q_id, r.cluster) for r in probe_rows], pair_schema
-    ).join(queries.select("q_id", "q_vec"), "q_id")
+    probed = spark.createDataFrame(pairs, pair_schema).join(
+        q.select("q_id", "q_vec"), "q_id"
+    )
     cells = spark.read.parquet(f"{path}/cells").where(
         F.col("cluster").isin(clusters)
     )
     cands = cells.join(F.broadcast(probed), "cluster")
     if exclude_query_ids:
         cands = cands.where(F.col("vec_id") != F.col("q_id"))
-    # unique by construction: one cell per candidate, distinct probed
-    # cells per query — see ivf_candidates (round-16)
     cands = cands.select(
         "q_id", "q_vec", F.col("vec_id").alias("c_id"), "vec"
     )
-    return _rerank_topk(cands, top_k, unique_pairs=True)
+    return _rerank_topk(cands, top_k)
 
 
 SEMDEDUP_THRESHOLD = 0.9
@@ -1046,10 +1057,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count() job. Result-equality of the two shapes is pinned by
     tests/test_similarity_scale.py::test_semantic_dedup_indexed_matches_inmemory.
     """
-    import hashlib
-    import os
-    import tempfile
-
     from ..io import parquet_num_rows
 
     emb = embeddings(spark, sf_dir).select(
@@ -1060,8 +1067,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = emb.count()
     k = semdedup_cells_for(n)
     centroids, assigned = ivf_index(emb, k)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_semdedup_{tag}")
+    path = scratch_path(sf_dir, "semdedup")
     # plain (unpartitioned) cells layout: the dedup reads every cell
     # anyway, so the per-cluster directory layout buys nothing here and
     # its many-small-files write cost (k dirs x n_tasks files) is the
@@ -1286,7 +1292,7 @@ QUERIES_TAIL = {
 }
 
 
-def label_centroid_sim(emb: DataFrame, materialize=None) -> DataFrame:
+def label_centroid_sim(emb: DataFrame) -> DataFrame:
     """Embedding-space QA: per-label centroids and the pairwise
     cosine between them — the collapse/contamination monitor a
     training pipeline runs over labeled embedding corpora (two labels
@@ -1299,15 +1305,7 @@ def label_centroid_sim(emb: DataFrame, materialize=None) -> DataFrame:
     join runs entirely over that bounded centroid table. Per-term
     DECIMAL(28,10) accumulation at both levels keeps the oracle
     replay exact; float32 components widen to double losslessly
-    before any arithmetic.
-
-    ``materialize`` (round-15): optional hook that cuts the centroid
-    table's lineage before the self-join. Without it the pair join's
-    two sides each re-derive the corpus-sized explode+aggregate
-    (executed plan: embeddings scanned twice, 0 ReusedExchange); the
-    contract row passes the per-sf_dir scratch-parquet stager so the
-    corpus pass runs once and both join sides read the bounded
-    |labels|×dim table."""
+    before any arithmetic."""
     comp = emb.select(
         "label", F.posexplode("embedding").alias("pos", "xf")
     ).select("label", "pos", F.col("xf").cast("double").alias("x"))
@@ -1317,8 +1315,6 @@ def label_centroid_sim(emb: DataFrame, materialize=None) -> DataFrame:
             / F.count("x")
         ).alias("c")
     )
-    if materialize is not None:
-        cent = materialize(cent, "centroids")
     a = cent.select(F.col("label").alias("la"), "pos", F.col("c").alias("ca"))
     b = cent.select(F.col("label").alias("lb"), "pos", F.col("c").alias("cb"))
     dec = lambda c: c.cast("decimal(28,10)")  # noqa: E731
@@ -1343,23 +1339,12 @@ def label_centroid_sim(emb: DataFrame, materialize=None) -> DataFrame:
 
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract (tail, round 9): pairwise label-centroid cosines over
-    the embeddings table. Round 15 staged the |labels|×dim centroid
-    table through per-sf_dir scratch so the corpus-sized
-    explode+aggregate runs once, not once per self-join side; round-16
-    sf1 A/B measured the staged shape 1.15x SLOWER at sf1 (2.25->2.59
-    s; also slower at sf0.1) — lazy default, staging behind
-    SPARK_GRAFT_STAGE_SHARED=1 (equivalence in test_eager_seams)."""
-    from .common import embeddings as _emb
-    from .common import scratch_stage, stage_shared_enabled
-
-    mat = None
-    if stage_shared_enabled():
-        def mat(df: DataFrame, name: str) -> DataFrame:
-            return scratch_stage(
-                spark, df.repartition(1), "labcent", sf_dir, name
-            )
-
-    return label_centroid_sim(_emb(spark, sf_dir), materialize=mat)
+    the embeddings table. The |labels|×dim centroid table stays lazy
+    although both self-join sides re-derive the corpus-sized
+    explode+aggregate (embeddings scanned twice): the sf1 A/B measured
+    a scratch-staged copy 1.15x SLOWER at sf1 (2.25->2.59 s; also
+    slower at sf0.1)."""
+    return label_centroid_sim(embeddings(spark, sf_dir))
 
 
 ORACLE["q_label_centroids"] = """

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .common import events, r6, ts_ms, r6z
+from .common import events, r6, ts_ms, r6z, stage
 
 HOUR_MS = 3_600_000
 
@@ -173,17 +173,9 @@ def q_sensor_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-15: the |types|×|hours| series table stages through
     per-sf_dir scratch parquet so the raw scan + mean aggregate run
     once, not once per self-join side."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"lss_corr_{tag}")
 
     def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(base, name)
-        df.repartition(1).write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return stage(df.repartition(1), sf_dir, "corr", name)
 
     return sensor_correlation(events(spark, sf_dir), materialize=mat)
 

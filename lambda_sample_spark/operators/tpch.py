@@ -25,33 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
-from .common import r6
+from .common import r6, stage
 
 
 def _r2(c):
     return F.round(c, 2)
-
-
-def _stage(
-    spark: SparkSession, sf_dir: str, df: DataFrame, name: str
-) -> DataFrame:
-    """Stage a BOUNDED intermediate through per-sf_dir scratch parquet
-    (the q_drift_psi / q_ccnet idiom — overwrite per invocation, so
-    every bench/oracle run recomputes from the raw inputs; no
-    localCheckpoint, which would leave persistent-RDD residue the
-    no-cache-leak test rejects). Used where a derived aggregate feeds
-    BOTH a scalar reduction and the main branch: the executed plans
-    show ReuseExchange does NOT merge the two lazy derivations (column
-    pruning makes the subtrees non-canonical), so without the cut the
-    fact scan and its exchange run once per consumer."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_tpch_{tag}", name)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 # round(sum(money_term), 2) entirely in integer arithmetic (the
@@ -871,7 +849,7 @@ def tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") * F.col("l_quantity")).cast("decimal(18,4)")
         ).alias("value")
     )
-    val = _stage(spark, sf_dir, val, "q11_val")
+    val = stage(val, sf_dir, "tpch", "q11_val")
     total = val.agg(F.sum("value").alias("grand_total"))
     return (
         val.join(F.broadcast(total))
@@ -909,7 +887,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_revenue"
         )
     )
-    rev = _stage(spark, sf_dir, rev, "q15_rev")
+    rev = stage(rev, sf_dir, "tpch", "q15_rev")
     mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
     supplier = load_table(spark, sf_dir, "supplier")
     return (

@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import documents
+from .common import documents, stage
 
 VIDEO_SCHEMA = "doc_id BIGINT, payload BINARY, n_frames INT"
 FRAME_HASH_SCHEMA = "doc_id BIGINT, frame_idx INT, dhash BIGINT"
@@ -307,17 +307,11 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     without it the adaptive plan re-runs the decode+hash mapInPandas
     pipeline once per consumer (both join sides + the stop census =
     3x the only expensive stage)."""
-    import hashlib
-    import os
-    import tempfile
-
     fh = video_frame_hashes(synthesize_video_media(spark, sf_dir))
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"lss_vfh_{tag}", "per_video")
-    fh.select("doc_id", "dhash").distinct().write.mode(
-        "overwrite"
-    ).parquet(path)
-    return video_near_dup(spark.read.parquet(path))
+    per_video = stage(
+        fh.select("doc_id", "dhash").distinct(), sf_dir, "vfh", "per_video"
+    )
+    return video_near_dup(per_video)
 
 
 _VIDEO_DHASH_CTE = """

@@ -18,9 +18,8 @@ from tests.mqtt_broker import MiniBroker
 
 
 # --- codec -------------------------------------------------------------
-
-
-pytestmark = pytest.mark.slow  # live-service/load/scale tier (round-16 task 1)
+# (pure byte-level tests run in the default tier; every test that
+# starts a broker, a bridge or a Spark job is marked slow)
 
 
 def test_varint_spec_boundaries():
@@ -87,6 +86,7 @@ def test_topic_filter_matching(filt, topic, want):
     assert M.topic_matches(filt, topic) is want
 
 
+@pytest.mark.slow
 def test_subscribe_rejects_invalid_filter(broker):
     cli = M.MqttClient(broker.host, broker.port, "strict")
     with pytest.raises(ValueError, match="invalid MQTT topic filter"):
@@ -104,6 +104,7 @@ def broker():
     b.stop()
 
 
+@pytest.mark.slow
 def test_pubsub_roundtrip_over_real_sockets(broker):
     sub = M.MqttClient(broker.host, broker.port, "sub1")
     sub.subscribe("sensors/power")
@@ -122,6 +123,7 @@ def test_pubsub_roundtrip_over_real_sockets(broker):
     sub.disconnect()
 
 
+@pytest.mark.slow
 def test_wildcard_subscriber_and_isolation(broker):
     wild = M.MqttClient(broker.host, broker.port, "wild")
     wild.subscribe("sensors/#")
@@ -141,6 +143,7 @@ def test_wildcard_subscriber_and_isolation(broker):
 # --- Spark integration -------------------------------------------------
 
 
+@pytest.mark.slow
 def test_bridge_to_structured_streaming(spark, broker, tmp_path):
     land = str(tmp_path / "landing")
     bridge = M.MqttFileBridge(
@@ -182,6 +185,7 @@ def test_bridge_to_structured_streaming(spark, broker, tmp_path):
         bridge.stop()
 
 
+@pytest.mark.slow
 def test_bridge_flags_dead_inbound_leg_on_broker_death(tmp_path):
     b = MiniBroker()
     bridge = M.MqttFileBridge(
@@ -198,6 +202,7 @@ def test_bridge_flags_dead_inbound_leg_on_broker_death(tmp_path):
         bridge.stop()
 
 
+@pytest.mark.slow
 def test_bridge_clean_stop_is_not_flagged_dead(broker, tmp_path):
     bridge = M.MqttFileBridge(
         broker.host, broker.port, "sensors/power", str(tmp_path / "land"),
@@ -208,6 +213,7 @@ def test_bridge_clean_stop_is_not_flagged_dead(broker, tmp_path):
     assert bridge.dead is False and bridge.error is None
 
 
+@pytest.mark.slow
 def test_mqtt_stream_uses_per_message_receive_ts(spark, tmp_path):
     # the envelope's ts_ms must become each ROW's ts (distinct per
     # message) — a stream-side current_timestamp() would stamp every
@@ -238,6 +244,7 @@ def test_mqtt_stream_uses_per_message_receive_ts(spark, tmp_path):
     assert got == [(float(i), 1_700_000_000_000 + i) for i in range(5)]
 
 
+@pytest.mark.slow
 def test_publish_stream_foreachbatch_sink(spark, broker, tmp_path):
     sub = M.MqttClient(broker.host, broker.port, "sink-sub")
     sub.subscribe("out/scores")

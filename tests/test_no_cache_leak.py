@@ -38,3 +38,22 @@ def test_no_persistent_rdds_after_query(spark, sf_dir, name):
     after = dict(spark.sparkContext._jsc.getPersistentRDDs())
     leaked = {k: v for k, v in after.items() if k not in before}
     assert not leaked, f"{name} left {len(leaked)} new persistent RDDs cached"
+
+
+def test_stage_overwrites_on_every_call(spark, tmp_path):
+    # common.stage is the one scratch-staging helper: a second call
+    # under the same (sf_dir, group, name) must hand back the NEW frame,
+    # never the directory the first call left behind — every contract
+    # row relies on this to recompute from its raw inputs on each run
+    import shutil
+
+    from lambda_sample_spark.operators.common import scratch_path, stage
+
+    sf_dir = str(tmp_path)
+    try:
+        a = stage(spark.range(5).toDF("x"), sf_dir, "stagetest", "t")
+        assert sorted(r.x for r in a.collect()) == [0, 1, 2, 3, 4]
+        b = stage(spark.range(10, 13).toDF("x"), sf_dir, "stagetest", "t")
+        assert sorted(r.x for r in b.collect()) == [10, 11, 12]
+    finally:
+        shutil.rmtree(scratch_path(sf_dir, "stagetest"), ignore_errors=True)

@@ -321,8 +321,8 @@ BUDGET = {
     # the day bottom-k window inside the STAGING job (not this plan);
     # the production read path is unchanged (day/month sample frames,
     # 2 exchanges).
-    # round-16: lazy day-sketch default (the staged variant behind
-    # SPARK_GRAFT_STAGE_SHARED measured slower at sf0.1 AND sf1); the
+    # round-16: the day sketches are lazy again (a scratch-staged
+    # copy measured slower at sf0.1 AND sf1, and was removed); the
     # bottom-k window subtree is re-derived per consumer, 9 exchanges
     "q_sampled_quantiles": 9,
     "q_csv_scan": 0,

@@ -28,7 +28,8 @@ from lambda_sample_spark.operators.similarity import (
 
 import pytest
 
-pytestmark = pytest.mark.slow  # scale/e2e tier (round-16 task 1)
+# tests that start no Spark job run in the default tier; the scale /
+# e2e tests that do are marked slow one by one
 
 
 def test_lsh_bits_grow_with_corpus():
@@ -74,6 +75,7 @@ def test_sign_margin_clears_float64_accumulation_error():
         assert min_abs >= MARGIN, (sf, min_abs)
 
 
+@pytest.mark.slow
 def test_udf_buckets_match_lsh_planes(spark):
     # The worker-side UDF inlines the plane arithmetic (a module-level
     # function reference would cloudpickle by-reference and require
@@ -106,6 +108,7 @@ def test_udf_buckets_match_lsh_planes(spark):
             assert got[(i, t)] == int(sigs[t]), (i, t)
 
 
+@pytest.mark.slow
 def test_candidate_set_is_budget_bounded(spark, sf_dir):
     emb = embeddings(spark, sf_dir).select(
         "vec_id", as_double(F.col("embedding")).alias("vec")
@@ -124,6 +127,7 @@ def test_candidate_set_is_budget_bounded(spark, sf_dir):
     assert per_query <= budget, (per_query, budget)
 
 
+@pytest.mark.slow
 def test_ann_recall_vs_exact(spark, sf_dir):
     ann = ann_lsh_topk(spark, sf_dir).select("q_id", "c_id")
     exact = similarity_topk(spark, sf_dir).select("q_id", "c_id")
@@ -133,6 +137,7 @@ def test_ann_recall_vs_exact(spark, sf_dir):
     assert hits / total >= 0.9, f"recall@10 {hits}/{total}"
 
 
+@pytest.mark.slow
 def test_ivf_topk_shape_and_recall(spark):
     # IVF-Flat: the alternative scale path (coarse quantizer + probe).
     # Uniform-random synthetic embeddings are the adversarial case for
@@ -156,6 +161,7 @@ def test_ivf_topk_shape_and_recall(spark):
     assert hits / exact.count() >= 0.4
 
 
+@pytest.mark.slow
 def test_ivf_candidate_fraction_is_sublinear(spark):
     # The round-2 verdict's finding: nprobe = k/4 probed a constant
     # quarter of all cells — a disguised linear scan. The default is
@@ -186,6 +192,7 @@ def test_ivf_candidate_fraction_is_sublinear(spark):
     assert max_cands < 0.3 * n, f"scanned {max_cands}/{n} — not sublinear"
 
 
+@pytest.mark.slow
 def test_fat_block_guard_no_quadratic_pairs(spark):
     # One dominant label: the all-pairs self-join would build n^2/2
     # comparisons; the guard must route the block through LSH
@@ -231,6 +238,7 @@ def test_fat_block_guard_no_quadratic_pairs(spark):
     assert (90001, 90002) in got
 
 
+@pytest.mark.slow
 def test_ann_search_external_queries(spark, sf_dir):
     # the generic surface: queries NOT drawn from the corpus
     from lambda_sample_spark.operators.similarity import ann_lsh_search
@@ -259,6 +267,7 @@ def test_ann_search_external_queries(spark, sf_dir):
     assert top1[1000100] == 100 and top1[1000101] == 101
 
 
+@pytest.mark.slow
 def test_semantic_dedup_flags_planted_copies(spark, sf_dir):
     # SemDeDup composition: cluster -> within-cluster cosine pairs ->
     # greedy keep-lowest-id. Planted near-copies (cos ~ 1 vs their
@@ -285,6 +294,7 @@ def test_semantic_dedup_flags_planted_copies(spark, sf_dir):
     assert flagged >= 0.9 * n_base, (flagged, n_base)
 
 
+@pytest.mark.slow
 def test_parquet_footer_count_matches_spark(spark, sf_dir):
     from lambda_sample_spark.io import load_table, parquet_num_rows
 
@@ -300,6 +310,7 @@ def _job_names(spark) -> list[str]:
     return [jl.apply(i).name() for i in range(jl.size())]
 
 
+@pytest.mark.slow
 def test_param_sizing_runs_no_spark_job(spark, sf_dir):
     """Sizing LSH bits / k-means k must come from parquet footer
     metadata, not a full-scan count() job: at 100 TB a cluster pass
@@ -323,6 +334,7 @@ def test_param_sizing_runs_no_spark_job(spark, sf_dir):
     assert df.columns == ["q_id", "c_id", "cos", "rk"]
 
 
+@pytest.mark.slow
 def test_ivf_sample_fit_assigns_full_corpus(spark, sf_dir):
     # fit_fraction < 1 (the 100 TB quantizer-training path) must train
     # on a sample but still assign EVERY vector exactly once, with
@@ -340,6 +352,7 @@ def test_ivf_sample_fit_assigns_full_corpus(spark, sf_dir):
     assert assigned.where(F.col("cluster").isNull()).count() == 0
 
 
+@pytest.mark.slow
 def test_persisted_ivf_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     # The docstring claim made executable: the persisted index is
     # partitioned by cluster, and a probe's cells scan carries the
@@ -398,6 +411,7 @@ def test_persisted_ivf_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     assert abs(r0.cos - round(dot / (na * nb), 6)) < 1e-6
 
 
+@pytest.mark.slow
 def test_semantic_dedup_indexed_matches_inmemory(spark, sf_dir, tmp_path):
     # The corpus-scale variant (read the persisted assignment) must
     # produce exactly the in-memory result — same k-means seed, same
@@ -435,6 +449,7 @@ def test_semantic_dedup_indexed_matches_inmemory(spark, sf_dir, tmp_path):
     assert indexed == inmem
 
 
+@pytest.mark.slow
 def test_probe_index_external_ids_and_zero_norm(spark, sf_dir, tmp_path):
     # External query namespace: an id collision with a corpus vec_id
     # must NOT suppress that vector (exclude_query_ids=False), and a
@@ -482,6 +497,7 @@ def test_probe_index_external_ids_and_zero_norm(spark, sf_dir, tmp_path):
     assert all(r.c_id != 3 for r in self_out.where("q_id = 3").collect())
 
 
+@pytest.mark.slow
 def test_contract_semantic_dedup_is_indexed_shape(spark, sf_dir):
     # round-8 (verdict item 1): the CONTRACT path must be structurally
     # semantic_dedup_indexed — the returned plan reads the materialized
@@ -499,6 +515,7 @@ def test_contract_semantic_dedup_is_indexed_shape(spark, sf_dir):
     assert df.count() > 0
 
 
+@pytest.mark.slow
 def test_ann_recall_on_clustered_corpus(spark):
     # round-8 (verdict item 3): the uniform-random testdata is the
     # documented ADVERSARIAL case for cell/bucket routing (recall
@@ -615,6 +632,7 @@ def test_semdedup_oracle_margins():
             assert np.abs(cc[iu] - SEMDEDUP_THRESHOLD).min() > 1e-9, sf
 
 
+@pytest.mark.slow
 def test_semdedup_fit_sample_order_matches_duckdb(spark):
     """The oracle refits centroids over the duckdb parquet read; the
     Spark fit samples via limit().collect(). Both must see the SAME
@@ -642,6 +660,7 @@ def test_semdedup_fit_sample_order_matches_duckdb(spark):
         assert got == want, sf
 
 
+@pytest.mark.slow
 def test_semdedup_oracle_on_planted_dupes(spark, tmp_path):
     """The graded corpus has no pairs above the 0.9 threshold (its
     dup column is honestly all-false); plant near-identical vectors in
@@ -704,6 +723,7 @@ def test_semdedup_oracle_on_planted_dupes(spark, tmp_path):
     assert set(sp[sp.is_semantic_dup].vec_id) == {1000 + i for i in range(0, 120, 10)}
 
 
+@pytest.mark.slow
 def test_fat_route_fires_at_default_limit_with_high_recall(spark, monkeypatch):
     """Round-11 verdict task #7: no synthetic limit — a planted corpus
     whose single label EXCEEDS the default FAT_BLOCK_LIMIT must (a)
@@ -774,6 +794,7 @@ def test_fat_route_fires_at_default_limit_with_high_recall(spark, monkeypatch):
     assert recall >= 0.9, f"fat-route recall {recall:.3f} over {len(truth)} pairs"
 
 
+@pytest.mark.slow
 def test_vectorized_pairs_bit_align_with_fold(spark, sf_dir):
     """Round-13 contract-grade vectorized pairing: the matmul is only
     a prefilter; candidates are recomputed with a strictly sequential
@@ -824,3 +845,48 @@ def test_prefilter_apron_covers_matmul_error(sf_dir):
         seq = dots / (nrm_seq[iu[0]] * nrm_seq[iu[1]])
         worst = max(worst, float(np.abs(sims[iu] - seq).max()))
     assert worst < sim._PREFILTER_APRON / 1000, worst
+
+
+def _tiny_ivf_index(spark, path, cells):
+    # hand-built 2-d index: three cells around the axes; ``cells`` is
+    # the (vec_id, vec, cluster) rows, written as ivf_write_index does
+    from lambda_sample_spark.operators.similarity import ivf_write_index
+
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.0])],
+        "cluster INT, cvec ARRAY<DOUBLE>",
+    )
+    assigned = spark.createDataFrame(
+        cells, "vec_id BIGINT, vec ARRAY<DOUBLE>, cluster INT"
+    )
+    ivf_write_index(assigned, centroids, path)
+
+
+def test_probe_index_enforces_unique_queries_and_collapses_dup_vecs(
+    spark, tmp_path
+):
+    from lambda_sample_spark.operators.similarity import ivf_probe_index
+
+    path = str(tmp_path / "ivf")
+    _tiny_ivf_index(
+        spark,
+        path,
+        [
+            (10, [1.0, 0.1], 0),
+            (10, [1.0, 0.1], 0),  # another producer stored vec 10 twice
+            (11, [1.0, 0.3], 0),
+            (12, [0.1, 1.0], 1),
+            (13, [-1.0, 0.0], 2),
+        ],
+    )
+    qschema = "q_id BIGINT, q_vec ARRAY<DOUBLE>"
+    # a repeated q_id would join every probed cell twice: rejected, at
+    # nprobe=1 too (where the copies probe the same single cell)
+    dup_q = spark.createDataFrame([(1, [1.0, 0.0]), (1, [1.0, 0.0])], qschema)
+    for nprobe in (1, 2):
+        with pytest.raises(ValueError, match="repeated q_id"):
+            ivf_probe_index(spark, path, dup_q, nprobe=nprobe, top_k=3)
+    # the duplicated index row collapses: each neighbour takes one rank
+    q = spark.createDataFrame([(1, [1.0, 0.0])], qschema)
+    out = ivf_probe_index(spark, path, q, nprobe=1, top_k=3).collect()
+    assert sorted((r.rk, r.c_id) for r in out) == [(1, 10), (2, 11)]
