@@ -6,7 +6,8 @@ Reference semantics (/root/reference/):
      newest 20,000 rows per sensor (Trainer.scala:38-57,59-74);
      single-class training data is a logged skip (Trainer.scala:47-49).
   M2 predict: posterior P(anomaly) = ``posteriori(1)``
-     (Analyzer.scala:72-83).
+     (Analyzer.scala:72-83); the serving layer scores a forest compiled
+     into an exact step table (compile_forest + step_lookup).
   M3 persistence: model blob round-trip (BinarySerializer.scala:88-101)
      -> MLlib native save/load.
 
@@ -22,7 +23,10 @@ matching the reference's own wide-tolerance test philosophy
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Label threshold ~ p96.5 of the events value distribution => ~3.5%
@@ -120,6 +124,72 @@ def predict_posterior(model, df: DataFrame) -> DataFrame:
     return model.transform(assembled).withColumn(
         "p_anomaly", vector_to_array(F.col("probability")).getItem(1)
     )
+
+
+_SPLIT_CONDITION = re.compile(r"(?:If|Else) \((.*)\)")
+_FEATURE0_SPLIT = re.compile(r"feature 0 (?:<=|>) (\S+)")
+
+
+def compile_forest(model) -> tuple[list[float], list[float]]:
+    """M2 compiled: a one-feature forest's posterior as an exact step
+    table ``(thresholds, posteriors)``, scored by :func:`step_lookup`.
+
+    Exactness: every split is a continuous ``value <= t`` on feature
+    0 (enforced below — anything else raises ``ValueError``), so two
+    values that fall on the same side of every threshold reach the
+    same leaf in every tree, and MLlib's posterior (the normalized sum
+    of those leaves' class shares) is the same double for both. The
+    sorted, deduplicated thresholds ``t_0 < … < t_{n-1}`` cut the line
+    into ``n + 1`` regions; ``posteriors[i]`` is the forest scored at
+    ``t_i``, the top of region ``(t_{i-1}, t_i]``, and
+    ``posteriors[n]`` is scored at NaN, which fails every ``<=`` and so
+    goes right at every split, the same path as any value above
+    ``t_{n-1}``. The lookup counts thresholds strictly below the value:
+
+    - ties: ``value == t_i`` goes left in MLlib (``<=``) and is not
+      counted by ``value > t_i``, so it lands in region ``i``;
+    - ``-0.0``: equal to ``0.0`` under both MLlib's ``<=`` and Spark's
+      ``>``, so it scores as ``0.0``;
+    - ±inf: ``-inf`` is below every threshold (region 0) and ``+inf``
+      above every finite one (region ``n``), as in MLlib;
+    - NaN: Spark orders NaN above every double, so it counts every
+      threshold and lands in region ``n``; MLlib sends it right at
+      every split, which is what ``posteriors[n]`` was scored on;
+    - NULL: no MLlib answer exists; the lookup returns NULL.
+
+    The thresholds come from ``toDebugString``, which prints each
+    threshold with Java's ``Double.toString`` — a string that parses
+    back to the same double. Scoring is ``predictProbability`` on the
+    driver, one call per region: no Spark job."""
+    from pyspark.ml.linalg import Vectors
+
+    if model.numFeatures != 1:
+        raise ValueError(
+            f"compile_forest needs a one-feature forest, got {model.numFeatures}"
+        )
+    thresholds = set()
+    for condition in _SPLIT_CONDITION.findall(model.toDebugString):
+        split = _FEATURE0_SPLIT.fullmatch(condition)
+        if split is None:
+            raise ValueError(
+                f"compile_forest needs continuous splits on feature 0, got {condition!r}"
+            )
+        thresholds.add(float(split.group(1)))
+    ordered = sorted(thresholds)
+    posteriors = [
+        float(model.predictProbability(Vectors.dense([x]))[1])
+        for x in [*ordered, math.nan]
+    ]
+    return ordered, posteriors
+
+
+def step_lookup(value: Column, thresholds: Column, posteriors: Column) -> Column:
+    """Score ``value`` against a :func:`compile_forest` step table held
+    in two array columns: the posterior of the region whose index is
+    the number of thresholds strictly below ``value``. NULL when
+    ``value`` or the table is NULL."""
+    below = F.size(F.filter(thresholds, lambda t: value > t))
+    return F.when(value.isNotNull(), F.element_at(posteriors, below + 1))
 
 
 def export_tree_debug(model, tree_index: int = 0) -> str:

@@ -160,9 +160,12 @@ def _staged_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per row, tripling the family's wall for identical bytes).
     The cache key includes the Spark applicationId, so reuse is scoped
     to ONE session — a stale /tmp artifact from an older code version
-    can never poison a fresh process."""
+    can never poison a fresh process. The staging is removed when the
+    process exits: its key dies with the session."""
+    import atexit
     import hashlib
     import os
+    import shutil
     import tempfile
 
     from .classifier import q_nb_quality
@@ -173,6 +176,7 @@ def _staged_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"lss_nbeval_{tag}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
         q_nb_quality(spark, sf_dir).select("logodds", "is_en").write.mode(
             "overwrite"
         ).parquet(path)

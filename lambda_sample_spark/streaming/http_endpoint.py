@@ -30,13 +30,16 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from ..ml.forest import compile_forest
 from .serving import serve_json
 
 
 class ServingEndpoint:
     """Threaded HTTP server around ``serve_json``. ``port=0`` picks an
     ephemeral port (exposed as ``.port``). Call ``stop()`` to shut
-    down; the server thread is a daemon either way."""
+    down; the server thread is a daemon either way. ``models`` maps
+    sensor -> MLlib forest; each is compiled into its step table here,
+    once, so no request pays for it."""
 
     def __init__(
         self,
@@ -50,7 +53,9 @@ class ServingEndpoint:
     ):
         self._spark = spark
         self._entry_dir = entry_dir
-        self._models = models or {}
+        self._forests = {
+            sensor: compile_forest(model) for sensor, model in (models or {}).items()
+        }
         self._ttl = ttl_secs
         self._lock = threading.Lock()
         self._cached: str | None = None
@@ -109,7 +114,7 @@ class ServingEndpoint:
         self._thread.start()
 
     def _refresh(self) -> str:
-        body = serve_json(self._spark, self._entry_dir, self._models)
+        body = serve_json(self._spark, self._entry_dir, self._forests)
         self._cached = body
         self._cached_at = time.monotonic()
         self.compute_count += 1

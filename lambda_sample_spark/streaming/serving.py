@@ -12,19 +12,26 @@ Reference lifecycle being reproduced (/root/reference/):
   result envelope             Analyzer.scala:24-32; JSON via
                               lib/JsonSerializer.scala:13-15
 
-Spark shape: one window+agg over the store, a broadcast left join of
-the (tiny) model-score dimension, pure column expressions for the
-blend — the whole "query" is a single plan; serving under load is
-reading its cached result (T7 /stress semantics).
+Spark shape: one scan of the store and one window+agg over it. Each
+sensor's forest arrives compiled into an exact step table
+(``ml.forest.compile_forest``: sorted split thresholds + the posterior
+of each region between them); a broadcast left join puts the table on
+its sensor's aggregate row, and ONE projection computes both the
+heuristic and the model score (``ml.forest.step_lookup``: count the
+thresholds below the newest reading) — no MLlib in the plan. The blend
+is pure column expressions too, so the whole "query" is a single plan;
+serving under load is reading its cached result (T7 /stress
+semantics).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.scoring import heuristic_score, weighted_ensemble
+from ..ml.forest import step_lookup
 from .pipeline import lww_entries
 
 NO_MODEL_SENTINEL = -1.0  # Analyzer.scala:148
@@ -44,11 +51,12 @@ def speed_layer_agg(entries: DataFrame, recent_n: int = 200) -> DataFrame:
     )
 
 
-def snapshot_from_agg(agg: DataFrame) -> DataFrame:
+def snapshot_from_agg(agg: DataFrame, *extra: Column) -> DataFrame:
     """The fast-analysis projection over a speed-layer aggregate:
-    (sensor, ts, fast_anomaly, avg_anomaly). Shared by the serving
-    query's speed leg AND pipeline.refresh_snapshot — ONE definition
-    of the heuristic select, so the snapshot table and the live query
+    (sensor, ts, fast_anomaly, avg_anomaly, *extra). Shared by the
+    serving query (which adds its model score as an extra column of the
+    same projection) AND pipeline.refresh_snapshot — ONE definition of
+    the heuristic select, so the snapshot table and the live query
     cannot drift."""
     return agg.select(
         "sensor",
@@ -57,6 +65,7 @@ def snapshot_from_agg(agg: DataFrame) -> DataFrame:
             F.col("latest_value"), F.col("avg_value"), F.col("sd_value")
         ).alias("fast_anomaly"),
         F.col("avg_value").alias("avg_anomaly"),
+        *extra,
     )
 
 
@@ -66,47 +75,29 @@ def speed_snapshot(entries: DataFrame, recent_n: int = 200) -> DataFrame:
     return snapshot_from_agg(speed_layer_agg(entries, recent_n))
 
 
-def model_scores(spark: SparkSession, models: dict, agg: DataFrame) -> DataFrame:
-    """Batch-layer posterior P(anomaly) of each sensor's LATEST value
-    under its trained forest — the tiny broadcastable dimension.
-
-    Fully lazy: each model's ``transform`` is applied to the probe
-    frame filtered to its own sensor and the branches are unioned, so
-    the whole dimension evaluates inside the ONE job that materializes
-    the serving query — no driver-side collect, no per-sensor Spark
-    job. The loop is over the model registry (driver metadata, bounded
-    by the fleet size), never over data; the many-keys twin is
-    ``ml.forest.train_per_key_pandas`` whose scorer is itself a
-    DataFrame."""
-    from functools import reduce
-
-    from ..ml.forest import predict_posterior
-
-    if not models:
-        return spark.createDataFrame([], "sensor STRING, full_anomaly DOUBLE")
-    probes = agg.select("sensor", F.col("latest_value").alias("value"))
-    branches = [
-        predict_posterior(model, probes.where(F.col("sensor") == sensor)).select(
-            "sensor", F.col("p_anomaly").alias("full_anomaly")
-        )
-        for sensor, model in sorted(models.items())
-    ]
-    return reduce(DataFrame.unionByName, branches)
-
-
 def serve_analysis(
     spark: SparkSession,
     entry_dir: str,
-    models: dict | None = None,
+    forests: dict | None = None,
     recent_n: int = 200,
 ) -> DataFrame:
     """The flagship composition: SensorMeta rows
-    (name, ts, fast_anomaly, full_anomaly, avg_anomaly)."""
+    (name, ts, fast_anomaly, full_anomaly, avg_anomaly). ``forests``
+    maps sensor -> ``ml.forest.compile_forest`` step table; a sensor
+    without one, or whose newest reading is NULL, gets no model score
+    (the ``-1`` sentinel)."""
+    steps = spark.createDataFrame(
+        [(s, t, p) for s, (t, p) in sorted((forests or {}).items())],
+        "sensor STRING, thresholds ARRAY<DOUBLE>, posteriors ARRAY<DOUBLE>",
+    )
     agg = speed_layer_agg(lww_entries(spark, entry_dir), recent_n)
-    fast = snapshot_from_agg(agg)
-    dim = model_scores(spark, models or {}, agg)
-    joined = fast.join(F.broadcast(dim), on="sensor", how="left")
-    return joined.select(
+    scored = snapshot_from_agg(
+        agg.join(F.broadcast(steps), on="sensor", how="left"),
+        step_lookup(
+            F.col("latest_value"), F.col("thresholds"), F.col("posteriors")
+        ).alias("full_anomaly"),
+    )
+    return scored.select(
         F.col("sensor").alias("name"),
         F.unix_millis("ts").alias("ts"),
         F.round("fast_anomaly", 6).alias("fast_anomaly"),
@@ -119,8 +110,8 @@ def serve_analysis(
     )
 
 
-def serve_json(spark: SparkSession, entry_dir: str, models: dict | None = None) -> str:
+def serve_json(spark: SparkSession, entry_dir: str, forests: dict | None = None) -> str:
     """``GET /`` end to end: analysis → AllMeta JSON envelope."""
     from ..sources.json_codec import all_meta_json
 
-    return all_meta_json(serve_analysis(spark, entry_dir, models))
+    return all_meta_json(serve_analysis(spark, entry_dir, forests))

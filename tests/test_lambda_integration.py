@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from lambda_sample_spark.ml.forest import train_models
+from lambda_sample_spark.ml.forest import compile_forest, train_models
 from lambda_sample_spark.sources.generator import SENSORS
 from lambda_sample_spark.streaming.pipeline import lww_entries, start_ingest
 from lambda_sample_spark.streaming.serving import (
@@ -48,9 +48,10 @@ def test_full_lambda_cycle(spark, tmp_path):
     # sensors that happened to stay single-class (Trainer.scala:47-49)
     labeled = entries.withColumnRenamed("sensor", "event_type")
     models = train_models(labeled)
+    forests = {sensor: compile_forest(model) for sensor, model in models.items()}
 
     # 3. serving (§3.1): speed ⋈ batch -> SensorMeta rows
-    meta = serve_analysis(spark, entry_dir, models)
+    meta = serve_analysis(spark, entry_dir, forests)
     rows = {r.name: r for r in meta.collect()}
     assert set(rows) == set(SENSORS)
     for r in rows.values():
@@ -63,7 +64,7 @@ def test_full_lambda_cycle(spark, tmp_path):
             assert 0.0 <= r.avg_anomaly <= 1.0
 
     # 4. the GET / response: AllMeta envelope, Jackson field order
-    js = serve_json(spark, entry_dir, models)
+    js = serve_json(spark, entry_dir, forests)
     payload = json.loads(js)
     assert set(payload) == {"entries"}
     assert len(payload["entries"]) == len(SENSORS)
